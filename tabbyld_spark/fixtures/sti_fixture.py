@@ -32,7 +32,7 @@ import tempfile
 from tabbyld_spark.functions.normalize import entity_localname_sql, normalize_entry_sql
 
 # bump when fixture generation or the mention/candidate SQL changes
-VERSION = 1
+VERSION = 2
 N_PAGES = 25
 SEED = 42
 
@@ -119,7 +119,11 @@ def sql_mentions(canonical: str) -> str:
 
 def sql_candidates(kg_labels: str, cap: int = 100) -> str:
     """CTE body for exact candidates + Levenshtein + per-mention cap (P7-P9),
-    continuing from the ``mentions`` CTE."""
+    continuing from the ``mentions`` CTE.
+
+    ``candidates`` is MATERIALIZED: DuckDB 1.0 inlines a non-materialised CTE
+    at every reference, and each ``cea`` of the full-chain oracles references
+    ``candidates`` about ten times through the P10-P19 feature stack."""
     lits = ", ".join(f"'{x}'" for x in LITERAL_LABELS)
     local = entity_localname_sql("l.entity")
     return f"""
@@ -131,7 +135,7 @@ def sql_candidates(kg_labels: str, cap: int = 100) -> str:
             JOIN {kg_labels} l ON m.mention_norm = l.surface_form
             WHERE m.ner NOT IN ({lits})
         ),
-        candidates AS (
+        candidates AS MATERIALIZED (
             SELECT table_id, col_role, mention, mention_norm, ner,
                    heading_labels, entity, lev
             FROM (

@@ -272,14 +272,18 @@ def _agg_ctes(canonical: str) -> str:
 def _cea_ctes(canonical: str) -> str:
     """P20 + literal shortcut (P7, :1061-1098): argmax candidate per mention
     (agg desc, entity asc — the deterministic tiebreak both engines add),
-    unioned with literal-NER instances at rank 1."""
+    unioned with literal-NER instances at rank 1.
+
+    ``cea`` is MATERIALIZED: DuckDB 1.0 inlines a non-materialised CTE at
+    every reference, and the full chain references ``cea`` up to five times
+    (triples, CTA and CPA votes, OWL), each copy with the whole feature stack."""
     lit_cases = " ".join(
         f"WHEN '{ner}' THEN '{uri}'" for ner, uri in sorted(NER_INSTANCE.items())
     )
     lits = ", ".join(f"'{x}'" for x in sorted(NER_INSTANCE))
     return f"""
         {_agg_ctes(canonical)},
-        cea AS (
+        cea AS MATERIALIZED (
             SELECT table_id, col_role, mention, mention_norm, entity, agg_rank
             FROM (
                 SELECT *, row_number() OVER (PARTITION BY table_id, col_role, mention
