@@ -15,7 +15,6 @@ only below the session broadcast threshold.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
@@ -98,30 +97,26 @@ def adaptive_broadcast(
 # high: over-estimating only demotes a borderline broadcast to sort-merge.
 ROW_BYTES_NARROW = 64
 
-_DEFAULT_COUNT_CAP = str(64 * 1024 * 1024)  # 64 MB est ⇒ ~1M narrow rows
+# Broadcast cap for a build side whose size is known from an exact count:
+# 64 MB estimated build ⇒ ~1M narrow rows
+COUNT_BROADCAST_MAX = 64 * 1024 * 1024
 
 
 def count_gated_hint(
     df: DataFrame,
     n_rows: int | None,
     row_bytes: int = ROW_BYTES_NARROW,
-    cap_bytes: int | None = None,
 ) -> DataFrame:
     """Broadcast-vs-merge decision from an EXACT row count (not a plan
     estimate): callers that already materialized an upstream stage know the
     row count of a derived frame precisely, which is strictly better
     information than Catalyst's multiplied estimates.  Because the count is
-    exact, the cap can sit well above the session broadcast threshold (env
-    ``SPARK_GRAFT_JOINBACK_BROADCAST_MAX``, default 64 MB estimated build
-    size) without the mis-estimate OOM risk the session threshold guards
-    against.  Unknown count ⇒ fail closed to sort-merge: the un-hinted
-    planner would consult exactly the non-credible estimates this helper
-    bypasses."""
-    if cap_bytes is None:
-        cap_bytes = parse_byte_conf(
-            os.environ.get("SPARK_GRAFT_JOINBACK_BROADCAST_MAX", _DEFAULT_COUNT_CAP)
-        )
-    if n_rows is not None and n_rows * row_bytes <= cap_bytes:
+    exact, the cap can sit well above the session broadcast threshold
+    (``COUNT_BROADCAST_MAX``, 64 MB estimated build size) without the
+    mis-estimate OOM risk the session threshold guards against.  Unknown
+    count ⇒ fail closed to sort-merge: the un-hinted planner would consult
+    exactly the non-credible estimates this helper bypasses."""
+    if n_rows is not None and n_rows * row_bytes <= COUNT_BROADCAST_MAX:
         return F.broadcast(df)
     return df.hint("merge")
 

@@ -18,14 +18,10 @@ round (iterative-loop requirement).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from tabbyld_spark.functions.lineage import cut
-
-from tabbyld_spark.functions.joins import parse_byte_conf
 
 
 def contract_edges(edges: DataFrame) -> DataFrame:
@@ -144,11 +140,12 @@ def _hash_min_body(sym, join_key, salt, max_iters) -> DataFrame:
     # broadcast-vs-shuffle decision for the label side: the checkpoint
     # propagates plan stats, so the driver-only estimate usually suffices
     # (no job); a non-credible estimate falls back to one exact count
-    from tabbyld_spark.functions.joins import _CREDIBLE_MAX, plan_size_estimate
-
-    cap = parse_byte_conf(
-        os.environ.get("SPARK_GRAFT_JOINBACK_BROADCAST_MAX", "64m")
+    from tabbyld_spark.functions.joins import (
+        _CREDIBLE_MAX,
+        COUNT_BROADCAST_MAX,
+        plan_size_estimate,
     )
+
     try:
         est = plan_size_estimate(labels)
     except Exception:
@@ -156,7 +153,7 @@ def _hash_min_body(sym, join_key, salt, max_iters) -> DataFrame:
     if not (0 <= est <= _CREDIBLE_MAX):
         # strings in both columns: budget generously per row
         est = labels.count() * 256
-    big_graph = est * salt > cap
+    big_graph = est * salt > COUNT_BROADCAST_MAX
     if big_graph:
         # big-graph path: the label side will shuffle every round, so pay ONE
         # up-front exchange to co-partition the loop-invariant edge side on

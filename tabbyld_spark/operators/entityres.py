@@ -188,7 +188,14 @@ def _prefix_filtered_pairs(kept: DataFrame, threshold: float) -> DataFrame:
         )
     )
     sz = F.size("attrs")
-    plen = sz - F.ceil(F.lit(float(threshold)) * sz).cast("int") + F.lit(1)
+    # round before the ceiling: float noise (0.56 * 25 = 14.000000000000002)
+    # must never shorten the prefix, or qualifying pairs are lost; rounding
+    # can only lengthen it, which costs candidates, never recall
+    plen = (
+        sz
+        - F.ceil(F.round(F.lit(float(threshold)) * sz, 9)).cast("int")
+        + F.lit(1)
+    )
     idx = ordered.select(
         "entity",
         "block",

@@ -34,8 +34,6 @@ candidate cap — and shuffles long-keyed rows only.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -251,7 +249,6 @@ def parent_classes(cands: DataFrame, kg_triples: DataFrame, hashed: bool = True)
 def semantic_similarity(
     cands: DataFrame,
     pclasses: DataFrame,
-    salt: int = 1,
     feat_rows: int | None = None,
 ) -> DataFrame:
     """P16 (CanonicalTableAnnotator.php:513-623): cross-cell candidate class
@@ -266,70 +263,13 @@ def semantic_similarity(
     count among the mention's candidates (:586-593); 0 when no votes.
 
     Pair rows carry surrogate longs + class localnames only — the per-table
-    quadratic stage shuffles no full strings.  Optionally
-    (``SPARK_GRAFT_P16_VOCAB_CAP`` > 0, default OFF) class localnames are
-    interned to dense ints whose order matches the lexicographic string
-    order, the Levenshtein distances are computed once on the vocabulary²
-    grid and broadcast, and the pair expansion shuffles fixed-width ints —
-    ~40% fewer bytes per pair, no per-pair edit-distance DP.  That trade
-    only pays where shuffle BYTES are the constraint (network-bound
-    clusters; the dbo ontology is ~800 classes so the grid stays tiny): on
-    this sandbox the two extra broadcast joins + the vocabulary collect
-    cost more than the inline ``levenshtein`` they replace (back-to-back
-    sf0.1 A/B: 31.6 s vs 47.5 s pipeline wall), so the flag defaults off.
-    Output is bit-identical on both paths (pytest-enforced, including the
-    lexicographic tiebreak).
-
-    ``salt`` > 1 splits the per-table pair expansion across ``salt`` reducers
-    (SURVEY §2.1 P16; same scheme as operators/components.py): the ``a`` side
-    replicates ``salt`` ways, each ``b`` row picks one replica by a hash of
-    its candidate key — one giant table (many mentions x capped candidates x
-    classes) no longer lands on a single hot reducer.  Output is identical
-    for any salt (proven by tests/test_features.py).
+    quadratic stage shuffles no full strings.
     """
     cands = ensure_keys(cands)
     if "pclass" in pclasses.columns and "ent_key" not in pclasses.columns:
         pclasses = pclasses.select(
             entity_skey().alias("ent_key"),
             entity_localname("pclass").alias("pclass"),
-        )
-    # Vocabulary interning (docstring above): dense ints in lexicographic
-    # order stand in for class localnames, so every downstream ordering /
-    # grouping / tiebreak on the int is EXACTLY the one on the string.  The
-    # limit+collect is bounded by the cap — an oversized vocabulary never
-    # reaches the driver, it just falls back to the string path.
-    vocab_cap = int(os.environ.get("SPARK_GRAFT_P16_VOCAB_CAP", "0"))
-    vocab = (
-        [
-            r[0]
-            for r in pclasses.select("pclass").distinct()
-            .limit(vocab_cap + 1).collect()
-        ]
-        if vocab_cap > 0
-        else []
-    )
-    # empty vocabulary: every candidate drops out of the inner joins below
-    # anyway — keep the string path rather than build an empty dimension
-    interned = 0 < len(vocab) <= vocab_cap
-    dmat = None
-    if interned:
-        spark = cands.sparkSession
-        vocab.sort()
-        cdim = spark.createDataFrame(
-            [(c, i + 1) for i, c in enumerate(vocab)], ["pclass", "cid"]
-        )
-        # vocabulary² distance grid, computed once executor-side; the equal-
-        # localname fast path keeps the grid build itself cheap
-        x, y = cdim.alias("x"), cdim.alias("y")
-        dmat = x.crossJoin(y).select(
-            F.col("x.cid").alias("a_c"),
-            F.col("y.cid").alias("b_c"),
-            F.when(F.col("x.pclass") == F.col("y.pclass"), F.lit(0))
-            .otherwise(F.levenshtein("x.pclass", "y.pclass"))
-            .alias("_d"),
-        )
-        pclasses = pclasses.join(F.broadcast(cdim), "pclass").select(
-            "ent_key", F.col("cid").alias("pclass")
         )
     base = cands.filter(F.col("col_role") == "DATA").select(
         F.xxhash64("table_id").alias("table_key"), "mention_key", "ent_key"
@@ -346,15 +286,7 @@ def semantic_similarity(
         F.col("ent_key").alias("b_e"),
         F.col("pclass").alias("b_c"),
     )
-    if salt > 1:
-        a = a.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        b = b.withColumn("_salt", F.pmod(F.xxhash64("b_m", "b_e"), F.lit(salt)))
-        pairs = a.join(b, ["table_key", "_salt"]).drop("_salt")
-    else:
-        pairs = a.join(b, "table_key")
-    pairs = pairs.filter(F.col("a_m") != F.col("b_m"))
+    pairs = a.join(b, "table_key").filter(F.col("a_m") != F.col("b_m"))
     # one explicit exchange on table_key alone: when the pair join broadcasts
     # (small side under threshold) its output carries no useful partitioning,
     # and a groupBy would shuffle on its full key set — after which each
@@ -363,20 +295,13 @@ def semantic_similarity(
     # satisfies all of them.
     # equal-strings fast path: candidate class vocabularies overlap heavily,
     # so a large share of pairs compare identical localnames — an equality
-    # probe is O(len) vs the O(len²) edit-distance DP (VERDICT r3 #7).  On
-    # the interned path the distance is a broadcast hash-lookup against the
-    # precomputed vocabulary grid instead — no per-pair DP at all (and the
-    # broadcast join preserves the hash(table_key) partitioning).
-    dist = pairs.repartition("table_key")
-    if interned:
-        dist = dist.join(F.broadcast(dmat), ["a_c", "b_c"])
-    else:
-        dist = dist.withColumn(
-            "_d",
-            F.when(F.col("a_c") == F.col("b_c"), F.lit(0)).otherwise(
-                F.levenshtein("a_c", "b_c")
-            ),
-        )
+    # probe is O(len) vs the O(len²) edit-distance DP (VERDICT r3 #7).
+    dist = pairs.repartition("table_key").withColumn(
+        "_d",
+        F.when(F.col("a_c") == F.col("b_c"), F.lit(0)).otherwise(
+            F.levenshtein("a_c", "b_c")
+        ),
+    )
     # Exchange-count discipline: table_key rides as the LEADING key of every
     # aggregation/window below.  It is functionally determined by a_m (the
     # mention hash encodes the table), so results are unchanged — but because
@@ -384,9 +309,7 @@ def semantic_similarity(
     # hash(table_key) partitioning the pair join already produced satisfies
     # ALL of them and Catalyst inserts no further exchanges (5 shuffles → 1;
     # a window-partition key that is a strict subset of the incoming hash
-    # keys would NOT be satisfied and would re-shuffle).  In the salted
-    # branch the join partitioning is (table_key, _salt), so one exchange
-    # back to table_key happens and the rest still fuse.
+    # keys would NOT be satisfied and would re-shuffle).
     per_ac = dist.groupBy("table_key", "a_m", "a_e", "b_m", "b_e", "a_c").agg(
         F.min("_d").alias("_md")
     )

@@ -22,8 +22,6 @@ O(rows²) loops.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -33,6 +31,7 @@ from tabbyld_spark.functions.normalize import normalize_entry, split_multivalue
 
 ROLE_DATA, ROLE_ROW, ROLE_COL = "DATA", "ROW", "COL"
 _ROLE_COLUMN = {ROLE_ROW: "row_heading", ROLE_COL: "column_heading"}
+MAX_GROUP_VALUES = 65536
 
 
 def data_mentions(canonical: DataFrame, provided_ner: bool = False) -> DataFrame:
@@ -233,7 +232,7 @@ def all_mentions(canonical: DataFrame, provided_ner: bool = False) -> DataFrame:
 def entry_context(
     canonical: DataFrame,
     hashed: bool = True,
-    max_group_values: int | None = None,
+    max_group_values: int = MAX_GROUP_VALUES,
 ) -> DataFrame:
     """P12: (ctx_key, vhash, n) — multiset of neighbouring DATA values per
     DATA mention, aggregated to counts (n) so the downstream similarity join
@@ -245,14 +244,9 @@ def entry_context(
     holding the mention; each matching row contributes once per holder row.
 
     ``max_group_values``: per-(table, heading) distinct-value cap for the
-    in-expression pair expansion (default env SPARK_GRAFT_ENTRYCTX_GROUP_CAP,
-    else 65536).  Groups above the cap route through an equivalent self-join
-    — identical output, no single-executor array.
+    in-expression pair expansion.  Groups above the cap route through an
+    equivalent self-join — identical output, no single-executor array.
     """
-    if max_group_values is None:
-        max_group_values = int(
-            os.environ.get("SPARK_GRAFT_ENTRYCTX_GROUP_CAP", "65536")
-        )
     # OR-join via inclusion-exclusion over per-heading value-count arrays
     # instead of materializing row pairs and deduping on a wide key: the
     # number of (holder row, context row) pairs sharing heading h is the

@@ -28,6 +28,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tabbyld_spark.functions.lineage import cut
 from tabbyld_spark.operators.entailment import rdfs_entailment
 from tabbyld_spark.operators.kgquery import kg_integrity_profile
 from tabbyld_spark.operators.kgstats import predicate_stats
@@ -75,14 +76,15 @@ def publish_kg(
 ) -> PublishResult:
     """Entail → gate → commit → compact.  Returns the publish record; raises
     :class:`KGPublishError` (catalog untouched) when the gate trips."""
-    derived = rdfs_entailment(
+    # cut once: the gate, the derived count and the commit each read it
+    derived = cut(rdfs_entailment(
         triples,
         subclass=subclass,
         subproperty=subproperty,
         domain=domain,
         range_=range_,
         entity_prefixes=entity_prefixes,
-    )
+    ))
     saturated = triples.unionByName(derived).distinct()
 
     checks_enabled = bool(functional_preds or disjoint_pairs) or (

@@ -15,7 +15,6 @@ is a shuffle boundary Catalyst schedules.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -48,16 +47,8 @@ def annotate_canonical(
     kg: dict[str, DataFrame],
     provided_ner: bool = False,
     fuzzy_enabled: bool = True,
-    p16_salt: int | None = None,
 ) -> AnnotationResult:
-    """Annotate canonical tables against the KG (S2-S6).
-
-    ``p16_salt``: salt factor for the P16 per-table pair join (default from
-    SPARK_GRAFT_P16_SALT, else 1).  Set > 1 on clusters where one giant
-    table's candidate pairs would land on a single reducer — output is
-    identical for any value."""
-    if p16_salt is None:
-        p16_salt = int(os.environ.get("SPARK_GRAFT_P16_SALT", "1"))
+    """Annotate canonical tables against the KG (S2-S6)."""
     mentions = all_mentions(canonical, provided_ner=provided_ner)
     if not provided_ner:
         gaz = build_gazetteer(kg["kg_labels"], kg["kg_types"], kg["kg_subclass"])
@@ -96,9 +87,7 @@ def annotate_canonical(
     # per occurrence (no cross-operator CSE) — measured 354s → 230s at 2 cores
     cands = cut(FT.context_similarity(cands, ectx, kctx, feat_rows=n_cands))
     pcl = FT.parent_classes(cands, kg["kg_triples"])
-    cands = cut(FT.semantic_similarity(
-        cands, pcl, salt=p16_salt, feat_rows=n_cands
-    ))
+    cands = cut(FT.semantic_similarity(cands, pcl, feat_rows=n_cands))
 
     scored = aggregate_ranks(cands)
     cea = cut(cea_top1(scored, literals))
@@ -106,8 +95,11 @@ def annotate_canonical(
     # winner sides in the CTA/CPA votes so the wide canonical scans join
     # without shuffling (scans the materialized blocks — cheap)
     n_cea = cea.count()
-    cta = cta_vote(cea, canonical, kg["kg_types"], cea_rows=n_cea)
-    cpa = cpa_vote(cea, canonical, kg["kg_triples"], cea_rows=n_cea)
+    # the votes are returned AND read again by emit_triples: without a cut a
+    # caller that commits cta, cpa and the triples runs each vote twice.
+    # Lazy, so a caller that reads only the CEA never runs the votes at all.
+    cta = cut(cta_vote(cea, canonical, kg["kg_types"], cea_rows=n_cea), eager=False)
+    cpa = cut(cpa_vote(cea, canonical, kg["kg_triples"], cea_rows=n_cea), eager=False)
     triples = emit_triples(cea, cta, cpa)
     return AnnotationResult(canonical, mentions, scored, cea, cta, cpa, triples)
 

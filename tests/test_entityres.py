@@ -189,3 +189,19 @@ def test_prefix_filter_is_lossless_vs_inverted_index(spark):
             ).collect()
         }
         assert fast == slow, f"threshold={t}: {fast ^ slow}"
+
+
+def test_prefix_length_survives_float_noise(spark):
+    # J(X, Y) = 14/25 = 0.56 exactly, but 0.56 * 25 = 14.000000000000002 in
+    # floating point: a plain ceiling gives X a prefix one attr too short
+    # (its 11 rarest attrs, none shared with Y) and the pair is lost
+    prof = _profiles(
+        spark,
+        [
+            ("X", "blk", [f"a{i:02d}" for i in range(1, 26)]),
+            ("Y", "blk", [f"a{i:02d}" for i in range(12, 26)]),
+        ],
+    )
+    for t in (0.55, 0.56):
+        out = blocked_same_as(prof, threshold=t).collect()
+        assert [(r.src, r.dst, r.jaccard) for r in out] == [("X", "Y", 0.56)], t

@@ -136,58 +136,57 @@ def test_semantic_similarity_votes_and_coefficient(spark):
     assert got[("b", DBR + "b1")] == pytest.approx(0.2)
 
 
-def test_semantic_similarity_salt_invariant(spark):
-    """Salted pair join (skew guard) must produce bit-identical sem_rank."""
-    rows = []
-    for m in range(6):
-        for c in range(3):
-            rows.append(("t", "DATA", f"m{m}", f"M{m}", "NONE", DBR + f"e{m}_{c}"))
-    cands = _cands(spark, rows)
-    pcl = spark.createDataFrame(
-        [(DBR + f"e{m}_{c}", DBO + ["X", "Y", "Zzz"][(m + c) % 3])
-         for m in range(6) for c in range(3)],
-        "entity string, pclass string",
-    )
-    base = {
-        (r["mention"], r["entity"]): r["sem_rank"]
-        for r in FT.semantic_similarity(cands, pcl, salt=1).collect()
-    }
-    for salt in (3, 8):
-        salted = {
-            (r["mention"], r["entity"]): r["sem_rank"]
-            for r in FT.semantic_similarity(cands, pcl, salt=salt).collect()
-        }
-        assert salted == base
-
-
-def test_semantic_similarity_interned_matches_string_path(spark, monkeypatch):
-    """The vocabulary-interned P16 path (dense ints + broadcast distance
-    grid) must be bit-identical to the inline-levenshtein string path,
-    including the lexicographic tiebreak (int order == string order by
-    construction of the dense ids)."""
+def test_semantic_similarity_tie_heavy_classes(spark):
+    """P16 on tie-heavy class names: Aaa/Aab/Aac are each at distance 1 from
+    one another, so minimum-distance ties are common.  Values pinned.  In
+    the second case a1 holds two classes that tie against b1's Aac, and the
+    lexicographic tiebreak decides the vote: Aaa (2 votes → 0.2), where a
+    last-wins tiebreak would split the votes 1/1 (→ 0.1)."""
     rows = []
     for m in range(5):
         for c in range(3):
             rows.append(("t", "DATA", f"m{m}", f"M{m}", "NONE", DBR + f"e{m}_{c}"))
     cands = _cands(spark, rows)
-    # classes chosen so several (min-distance) ties exist and the tiebreak
-    # actually decides: Aaa/Aab are distance 1 from each other and from Aac
     pcl = spark.createDataFrame(
         [(DBR + f"e{m}_{c}", DBO + ["Aaa", "Aab", "Aac", "Zz"][(m * 3 + c) % 4])
          for m in range(5) for c in range(3)],
         "entity string, pclass string",
     )
-    monkeypatch.setenv("SPARK_GRAFT_P16_VOCAB_CAP", "1024")  # interned path
-    interned = {
+    got = {
         (r["mention"], r["entity"]): r["sem_rank"]
         for r in FT.semantic_similarity(cands, pcl).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_P16_VOCAB_CAP", "0")  # default string path
-    fallback = {
+    # one class per candidate: 4 other mentions x 3 candidates = 12 votes
+    assert got == {
+        (f"m{m}", DBR + f"e{m}_{c}"): 0.12 for m in range(5) for c in range(3)
+    }
+
+    cands = _cands(
+        spark,
+        [
+            ("t", "DATA", "a", "A", "NONE", DBR + "a1"),
+            ("t", "DATA", "b", "B", "NONE", DBR + "b1"),
+            ("t", "DATA", "b", "B", "NONE", DBR + "b2"),
+        ],
+    )
+    pcl = spark.createDataFrame(
+        [
+            (DBR + "a1", DBO + "Aab"),
+            (DBR + "a1", DBO + "Aaa"),
+            (DBR + "b1", DBO + "Aac"),
+            (DBR + "b2", DBO + "Aaa"),
+        ],
+        "entity string, pclass string",
+    )
+    got = {
         (r["mention"], r["entity"]): r["sem_rank"]
         for r in FT.semantic_similarity(cands, pcl).collect()
     }
-    assert fallback == interned
+    assert got == {
+        ("a", DBR + "a1"): 0.2,
+        ("b", DBR + "b1"): 0.1,
+        ("b", DBR + "b2"): 0.1,
+    }
 
 
 def test_relationship_rank_cross_mention_triples(spark):
