@@ -99,8 +99,9 @@ def generate_candidates(
 ) -> tuple[DataFrame, DataFrame]:
     """→ (literal annotations, capped scored candidates).
 
-    ``fuzzy``: optional (table_id, col_role, mention, entity) pairs from the
-    LSH blocker, unioned in before rescoring.
+    ``fuzzy``: optional (mention_key, entity) pairs from the LSH blocker
+    (:func:`operators.fuzzy.lsh_fuzzy_candidates`), unioned in before
+    rescoring.
     """
     from tabbyld_spark.operators.features import ensure_keys
 
@@ -108,13 +109,8 @@ def generate_candidates(
     cands = exact_candidates(rest, kg_labels)
     if fuzzy is not None:
         # fuzzy carries (mention_key, entity); rejoin the mention payload on
-        # the surrogate key (fallback: legacy string-keyed shape)
-        join_key = ["mention_key"] if "mention_key" in fuzzy.columns else [
-            "table_id", "col_role", "mention"
-        ]
-        extra = fuzzy.join(
-            rest.drop("entity") if "entity" in rest.columns else rest, join_key
-        )
+        # the surrogate key
+        extra = fuzzy.join(rest, "mention_key")
         cands = cands.select(extra.columns).unionByName(extra)
         # dedup key includes the original strings: surrogate 64-bit keys are
         # for partitioning, but a birthday collision at 10^12-row scale must

@@ -47,11 +47,11 @@ def _closure_pairs(
 ) -> DataFrame | None:
     """(child, parent) edges → strict-ancestor pairs (depth ≥ 1).
 
-    Count-gated hybrid (the ``count_gated_hint`` pattern): ontology edge
-    sets are schema-sized, so when the EXACT count fits ``driver_max`` the
-    transitive closure runs driver-side on the collected edges — identical
-    pairs, none of the iterative loop's ~2-jobs-per-round latency (the
-    dominant cost of q_rdfs_entail was two such loops over <10 edges).
+    Size-gated hybrid: ontology edge sets are schema-sized, so when the
+    edge set fits ``driver_max`` rows the transitive closure runs
+    driver-side on the collected edges — identical pairs, none of the
+    iterative loop's ~2-jobs-per-round latency (the dominant cost of
+    q_rdfs_entail was two such loops over <10 edges).
     Larger hierarchies take :func:`closure.subclass_closure`'s
     O(log diameter) distributed doubling unchanged.
 
@@ -64,10 +64,13 @@ def _closure_pairs(
     if edges is None:
         return None
     sess = edges.sparkSession
-    n = edges.count()
-    if n <= int(driver_max):
+    # one bounded collect decides the gate AND fetches the edges: at most
+    # driver_max + 1 rows ever reach the driver, and a schema-sized
+    # (single-partition) edge set costs one job, not a count plus a collect
+    head = edges.limit(int(driver_max) + 1).collect()
+    if len(head) <= int(driver_max):
         adj: dict[str, set[str]] = {}
-        for r in edges.collect():
+        for r in head:
             adj.setdefault(r["child"], set()).add(r["parent"])
         pairs: set[tuple[str, str]] = set()
         overflow = False

@@ -73,6 +73,14 @@ class SnapshotCatalog(_StageRunner):
     def exists(self, table: str) -> bool:
         return self.manifest(table) is not None
 
+    def _commit_manifest(self, table: str, man: dict) -> None:
+        """Atomic commit: write the manifest beside the live one, then
+        ``os.replace`` it in — readers see the old or the new, never a mix."""
+        path = self._manifest_path(table)
+        with open(path + ".tmp", "w") as f:
+            json.dump(man, f, indent=1)
+        os.replace(path + ".tmp", path)
+
     def write(self, df: DataFrame, table: str, lineage: dict | None = None) -> str:
         """Overwrite-commit a new snapshot; returns the snapshot id."""
         man = self.manifest(table) or {"history": []}
@@ -92,10 +100,7 @@ class SnapshotCatalog(_StageRunner):
             {"snapshot": snap_id, "rows": n_rows, "dirs": [snap_id],
              "lineage": lineage or {}}
         )
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(man, f, indent=1)
-        os.replace(tmp, self._manifest_path(table))  # atomic commit
+        self._commit_manifest(table, man)
         return snap_id
 
     def append(self, df: DataFrame, table: str, lineage: dict | None = None) -> str:
@@ -126,10 +131,7 @@ class SnapshotCatalog(_StageRunner):
                 "lineage": {**(lineage or {}), "append_rows": n_delta},
             }
         )
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(man, f, indent=1)
-        os.replace(tmp, self._manifest_path(table))  # atomic commit
+        self._commit_manifest(table, man)
         return snap_id
 
     @staticmethod
@@ -201,10 +203,7 @@ class SnapshotCatalog(_StageRunner):
             new_man["history"] = [
                 h for h in new_man["history"] if h["snapshot"] != snap
             ]
-            tmp = self._manifest_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(new_man, f, indent=1)
-            os.replace(tmp, self._manifest_path(table))
+            self._commit_manifest(table, new_man)
             shutil.rmtree(
                 os.path.join(self._table_dir(table), snap), ignore_errors=True
             )
@@ -227,22 +226,26 @@ class SnapshotCatalog(_StageRunner):
         to_expire = [
             h for h in live[:-keep] if h["snapshot"] != man["current"]
         ]
-        # append snapshots REFERENCE older snapshots' data dirs: a dir is
-        # reclaimable only when no surviving snapshot lists it (the same
-        # reachability rule Iceberg's expire_snapshots applies to data files)
-        kept = [h for h in live if h not in to_expire]
-        referenced = {d for h in kept for d in self._entry_dirs(h)}
         for h in to_expire:
-            own = h["snapshot"]
-            if own not in referenced:
-                shutil.rmtree(
-                    os.path.join(self._table_dir(table), own), ignore_errors=True
-                )
             h["expired"] = True
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(man, f, indent=1)
-        os.replace(tmp, self._manifest_path(table))
+        self._commit_manifest(table, man)
+        # append snapshots REFERENCE older snapshots' data dirs: a dir is
+        # reclaimable only when no live snapshot lists it (the same
+        # reachability rule Iceberg's expire_snapshots applies to data
+        # files).  The sweep covers EVERY expired entry, not just this
+        # call's: a dir kept alive by an append snapshot must go once that
+        # snapshot expires too.  It runs after the commit, so a kill in
+        # between leaves only unlisted dirs, which the next expiry sweeps.
+        referenced = {
+            d for h in man["history"] if not h.get("expired")
+            for d in self._entry_dirs(h)
+        }
+        for h in man["history"]:
+            if h.get("expired") and h["snapshot"] not in referenced:
+                shutil.rmtree(
+                    os.path.join(self._table_dir(table), h["snapshot"]),
+                    ignore_errors=True,
+                )
         return [h["snapshot"] for h in to_expire]
 
     def drop(self, table: str) -> None:

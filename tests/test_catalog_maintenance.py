@@ -134,3 +134,18 @@ def test_compact_consolidates_append_chain(spark, tmp_path):
     # now the old chain is unreferenced and fully reclaimable
     cat.expire_snapshots("t", keep_last=1)
     assert cat.read(spark, "t").count() == 2
+
+
+def test_expire_sweeps_dirs_kept_by_an_earlier_expiry(spark, tmp_path):
+    cat = SnapshotCatalog(str(tmp_path))
+    s0 = cat.write(_df(spark, [("a", 1)]), "t")
+    cat.append(_df(spark, [("b", 2)]), "t")
+    s2 = cat.compact(spark, "t", target_rows_per_file=10)
+    tdir = os.path.join(str(tmp_path), "t")
+    # s0 expires, but the append snapshot s1 still lists its dir
+    cat.expire_snapshots("t", keep_last=2)
+    assert os.path.isdir(os.path.join(tdir, s0))
+    # s1 expires: no live snapshot lists s0's dir any more, so it goes too
+    cat.expire_snapshots("t", keep_last=1)
+    assert sorted(d for d in os.listdir(tdir) if d.startswith("snap-")) == [s2]
+    assert cat.read(spark, "t").count() == 2

@@ -1,9 +1,8 @@
-"""Size-gated broadcast helper + legacy-shape guards."""
+"""Size-gated broadcast helper."""
 
 from pyspark.sql import functions as F
 
 from tabbyld_spark.functions.joins import adaptive_broadcast, parse_byte_conf, plan_size_estimate
-from tabbyld_spark.operators.mentions import heading_mentions
 
 
 def test_parse_byte_conf():
@@ -61,18 +60,3 @@ def test_adaptive_broadcast_non_credible_estimate(spark):
     assert adaptive_broadcast(agg, threshold_bytes=1, proxy=base) is agg
     assert adaptive_broadcast(agg, threshold_bytes=1 << 40, proxy=base) is not agg
 
-
-def test_heading_mentions_accepts_bare_role_string(spark):
-    canonical = spark.createDataFrame(
-        [("t", 0, 0, "v", "Alpha | Beta", "Col")],
-        "table_id string, row_idx int, col_idx int, data string, "
-        "row_heading string, column_heading string",
-    )
-    got = {r["mention"] for r in heading_mentions(canonical, "ROW").collect()}
-    assert got == {"Alpha", "Beta"}
-    try:
-        heading_mentions(canonical, "BOGUS")
-    except ValueError as e:
-        assert "BOGUS" in str(e)
-    else:
-        raise AssertionError("expected ValueError for unknown role")

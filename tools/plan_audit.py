@@ -19,6 +19,7 @@ Usage: python tools/plan_audit.py
 from __future__ import annotations
 
 import sys
+from collections import Counter
 
 sys.path.insert(0, ".")
 
@@ -139,7 +140,7 @@ def run_audit(spark, sf: str = "/root/testdata/sf0.01") -> list[tuple[str, bool,
     # frame's plan is just the checkpoint scan and would hide the joins.
     from tabbyld_spark.functions.ner import attach_ner, build_gazetteer
     from tabbyld_spark.operators.candidates import exact_candidates, with_levenshtein
-    from tabbyld_spark.operators.mentions import all_mentions
+    from tabbyld_spark.operators.mentions import all_mentions, entry_context
 
     kg = build_kg(seed=42)
     fx = gen_pages_pd(kg, n_pages=10, seed=42)
@@ -165,6 +166,18 @@ def run_audit(spark, sf: str = "/root/testdata/sf0.01") -> list[tuple[str, bool,
         "codegen/candidates",
         "*(" in p,
         f"{sum(1 for ln in p.splitlines() if '*(' in ln)} operators inside codegen spans",
+    )
+    # 3b. P12 entry context pair-expands every (table, heading) group through
+    # the self-join alone: no group-size Window and no collect_list + explode
+    # Generate anywhere in its plan
+    p = plan_of(entry_context(canonical))
+    nodes = Counter(
+        ln.lstrip(" :+-*()0123456789").split(" ")[0] for ln in p.splitlines()
+    )
+    check(
+        "shape/entry_context",
+        nodes["Window"] == 0 and nodes["Generate"] == 0,
+        f"{nodes['Window']} Window and {nodes['Generate']} Generate nodes",
     )
     # end-to-end sanity on the same fixture (checkpointed result still runs)
     res = annotate_canonical(canonical, kgs, provided_ner=True, fuzzy_enabled=False)
