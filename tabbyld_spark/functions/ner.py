@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tabbyld_spark.fixtures.kg import NER_CLASS
+from tabbyld_spark.functions.frames import local_frame
 
 LITERAL_RULES: list[tuple[str, str]] = [
     ("PERCENT", r"^-?\d+([.,]\d+)?%$"),
@@ -44,9 +45,10 @@ def literal_ner(col: Column | str) -> Column:
 
 def build_gazetteer(kg_labels: DataFrame, kg_types: DataFrame, kg_subclass: DataFrame) -> DataFrame:
     """(surface_form, ner) — one row per surface form, deterministic label."""
-    ner_top = kg_labels.sparkSession.createDataFrame(
+    ner_top = local_frame(
+        kg_labels.sparkSession,
         [(cls_uri, label) for label, cls_uri in NER_CLASS.items()],
-        ["ner_top_class", "ner"],
+        "ner_top_class string, ner string",
     )
     ent_ner = (
         kg_types.join(

@@ -39,6 +39,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tabbyld_spark.functions.frames import local_frame
 from tabbyld_spark.functions.lineage import cut
 from tabbyld_spark.operators.importance import hashed_ngram_counts
 
@@ -150,7 +151,7 @@ def train_text_classifier(
             wm = F.create_map(*pairs)
             wexpr = F.coalesce(F.try_element_at(wm, F.col("bucket")), F.lit(0.0))
         else:
-            wdf = sess.createDataFrame(sorted(w.items()), "bucket long, _w double")
+            wdf = local_frame(sess, sorted(w.items()), "bucket long, _w double")
             staged_src = feats.join(F.broadcast(wdf), "bucket", "left")
             wexpr = F.coalesce(F.col("_w"), F.lit(0.0))
         # doc margin via a window over the feature rows (no corpus join),
@@ -199,11 +200,7 @@ def train_text_classifier(
             for k in touched
         }
         intercept = intercept + float(lr) * b0
-    weights = sess.createDataFrame(
-        sorted(w.items()) or [(None, None)], "bucket long, w double"
-    )
-    if not w:
-        weights = weights.filter(F.col("bucket").isNotNull())
+    weights = local_frame(sess, sorted(w.items()), "bucket long, w double")
     return TextClassifier(weights=weights, intercept=intercept, n_buckets=n_buckets)
 
 

@@ -19,83 +19,180 @@ Stratification makes one pass reach the fixpoint for this fragment:
 property inheritance first (it mints new (s q o) triples that feed
 domain/range), then domain/range (they mint type triples), then class
 inheritance (type triples only beget type triples — nothing flows back).
-Both ⊑-closures reuse :func:`operators.closure.subclass_closure`
-(O(log diameter) doubling); ontology tables are schema-sized and
-broadcast, so every rule is a broadcast join over one scan of the triple
-selection it needs — the corpus never shuffles for reasoning.
+The first two strata read only the schema on their rule side, so they are
+composed on the driver into ONE pred-keyed rule table ``(pred, kind, val)``:
+``inherit`` rows are SP*, and a ``domain``/``range`` row for p holds the
+declarations of p and of every q ∈ SP*(p).  The class stratum is the
+class-keyed SC* table.  The corpus side is then one compiled pass over one
+scan of the input: the non-type triples broadcast-join the rule table on
+``pred``, the input types plus the minted types broadcast-join SC* on the
+class (both as left joins that pass every row on, so the stream carries
+input and derived rows together), and one ``groupBy(subj, pred, obj)``
+keeps the triples no input row states — two broadcast lookups and one
+shuffle, whatever the schema holds, and no Python worker: both tables are
+:func:`functions.frames.local_frame` frames.
 
-Deterministic (pure joins + distinct), SQL-twinnable (driver oracle
+The schema reaches the driver through one bounded collect; both closures
+are built there (:func:`_closure_pairs`' size gate).  A schema or closure
+too large for the driver falls back to :func:`closure.subclass_closure`'s
+O(log diameter) doubling and Spark joins for the composition; both
+branches feed the same two lookups, so the corpus-side plan is the same.
+
+Deterministic (pure joins + one aggregate), SQL-twinnable (driver oracle
 ``q_rdfs_entail`` re-derives every rule with a recursive CTE).
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tabbyld_spark.functions.frames import local_frame
 from tabbyld_spark.operators.closure import subclass_closure
 
 __all__ = ["rdfs_entailment"]
 
 RDF_TYPE = "rdf:type"
+# schema rows the driver takes (all four frames together), and closure
+# pairs one hierarchy may grow to there, before the distributed fallback
+DRIVER_MAX = 100_000
+DRIVER_MAX_PAIRS = 2_000_000
+TRIPLES_DDL = "subj string, pred string, obj string"
+PAIRS_DDL = "child string, parent string"
+RULES_DDL = "pred string, kind string, val string"
 
 
-def _closure_pairs(
-    edges: DataFrame | None,
-    driver_max: int = 100_000,
-    driver_max_pairs: int = 2_000_000,
-) -> DataFrame | None:
-    """(child, parent) edges → strict-ancestor pairs (depth ≥ 1).
-
-    Size-gated hybrid: ontology edge sets are schema-sized, so when the
-    edge set fits ``driver_max`` rows the transitive closure runs
-    driver-side on the collected edges — identical pairs, none of the
-    iterative loop's ~2-jobs-per-round latency (the dominant cost of
-    q_rdfs_entail was two such loops over <10 edges).
-    Larger hierarchies take :func:`closure.subclass_closure`'s
-    O(log diameter) distributed doubling unchanged.
+def _driver_closure(edges, max_pairs: int) -> set[tuple[str, str]] | None:
+    """(child, parent) edge rows → strict-ancestor pairs (depth ≥ 1), or
+    None once the pair set outgrows ``max_pairs``.
 
     The edge gate alone cannot bound the MEMORY of the driver path: a deep
     hierarchy's closure is O(V × avg-ancestors) pairs — 100k edges can
-    close to 10⁸⁺ pairs (a driver OOM) while passing the edge gate.  So
-    the closure build also aborts to the distributed path the moment the
-    accumulated pair set exceeds ``driver_max_pairs`` (identical output
-    either way; the abort costs only the partial build)."""
-    if edges is None:
-        return None
-    sess = edges.sparkSession
-    # one bounded collect decides the gate AND fetches the edges: at most
-    # driver_max + 1 rows ever reach the driver, and a schema-sized
-    # (single-partition) edge set costs one job, not a count plus a collect
+    close to 10⁸⁺ pairs (a driver OOM) while passing the edge gate."""
+    adj: dict[str, set[str]] = {}
+    for child, parent in edges:
+        adj.setdefault(child, set()).add(parent)
+    pairs: set[tuple[str, str]] = set()
+    for start in adj:
+        seen: set[str] = set()
+        stack = list(adj[start])
+        while stack:
+            p = stack.pop()
+            if p in seen:
+                continue
+            seen.add(p)
+            stack.extend(adj.get(p, ()))
+        pairs.update((start, p) for p in seen)
+        if len(pairs) > int(max_pairs):
+            return None
+    return pairs
+
+
+def _closure_pairs(
+    edges: DataFrame,
+    driver_max: int = DRIVER_MAX,
+    driver_max_pairs: int = DRIVER_MAX_PAIRS,
+) -> DataFrame:
+    """(child, parent) edges → strict-ancestor pairs (depth ≥ 1).
+
+    Size-gated: when the edge set fits ``driver_max`` rows (one bounded
+    collect decides the gate AND fetches the edges) and its closure fits
+    ``driver_max_pairs``, the closure is built on the driver and comes back
+    as a local frame; otherwise :func:`closure.subclass_closure`'s
+    distributed doubling computes the same pairs."""
     head = edges.limit(int(driver_max) + 1).collect()
     if len(head) <= int(driver_max):
-        adj: dict[str, set[str]] = {}
-        for r in head:
-            adj.setdefault(r["child"], set()).add(r["parent"])
-        pairs: set[tuple[str, str]] = set()
-        overflow = False
-        for start in adj:
-            seen: set[str] = set()
-            stack = list(adj[start])
-            while stack:
-                p = stack.pop()
-                if p in seen:
-                    continue
-                seen.add(p)
-                stack.extend(adj.get(p, ()))
-            pairs.update((start, p) for p in seen)
-            if len(pairs) > int(driver_max_pairs):
-                overflow = True  # closure outgrew the driver — go distributed
-                break
-        if not overflow:
-            return sess.createDataFrame(
-                sorted(pairs), "child string, parent string"
-            )
+        pairs = _driver_closure(((r["child"], r["parent"]) for r in head), driver_max_pairs)
+        if pairs is not None:
+            return local_frame(edges.sparkSession, sorted(pairs), PAIRS_DDL)
     return (
         subclass_closure(edges)
         .filter(F.col("depth") >= 1)
         .select("child", "parent")
         .distinct()
+    )
+
+
+def _compose(sp: set, decls: list[tuple[str, str, str]]) -> list[tuple[str, str, str]]:
+    """SP* pairs + (kind, pred, cls) declarations → the rule table rows: the
+    driver twin of :func:`_compose_frames`."""
+    up: dict[str, set[str]] = {}
+    for p, q in sp:
+        up.setdefault(p, set()).add(q)
+    declared: dict[str, list[tuple[str, str]]] = {}
+    for kind, q, cls in decls:
+        declared.setdefault(q, []).append((kind, cls))
+    rules = {(p, "inherit", q) for p, q in sp}
+    for p in set(up) | set(declared):
+        for q in up.get(p, set()) | {p}:
+            rules.update((p, kind, cls) for kind, cls in declared.get(q, ()))
+    return sorted(rules)
+
+
+def _compose_frames(sp: DataFrame, decls: DataFrame) -> DataFrame:
+    """:func:`_compose` as Spark joins, for a schema too large for the
+    driver: ``sp`` (child, parent) SP* pairs, ``decls`` (kind, q, cls)."""
+    up = sp.select(F.col("child").alias("pred"), F.col("parent").alias("q")).unionByName(
+        decls.select(F.col("q").alias("pred"), "q")
+    ).distinct()
+    return sp.select(
+        F.col("child").alias("pred"), F.lit("inherit").alias("kind"),
+        F.col("parent").alias("val"),
+    ).unionByName(
+        up.join(decls, "q").select("pred", "kind", F.col("cls").alias("val"))
+    )
+
+
+def _rule_tables(
+    subclass: DataFrame | None,
+    subproperty: DataFrame | None,
+    domain: DataFrame | None,
+    range_: DataFrame | None,
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """The four schema frames → (rule table, SC* table); None where a table
+    is known to be empty.  One bounded collect fetches all four."""
+    given = [
+        df.select(F.lit(tag).alias("tag"), F.col(a).alias("a"), F.col(b).alias("b"))
+        for tag, df, a, b in (
+            ("subclass", subclass, "child", "parent"),
+            ("subproperty", subproperty, "child", "parent"),
+            ("domain", domain, "pred", "cls"),
+            ("range", range_, "pred", "cls"),
+        )
+        if df is not None
+    ]
+    if not given:
+        return None, None
+    schema = reduce(DataFrame.unionByName, given)
+    # one job: the union is read as a single partition so the limit never
+    # re-scans for a second batch, and at most DRIVER_MAX + 1 rows arrive
+    head = schema.coalesce(1).limit(DRIVER_MAX + 1).collect()
+    if len(head) <= DRIVER_MAX:
+        def closed(tag: str) -> set[tuple[str, str]] | None:
+            return _driver_closure([(a, b) for t, a, b in head if t == tag], DRIVER_MAX_PAIRS)
+
+        sp, sc = closed("subproperty"), closed("subclass")
+        if sp is not None and sc is not None:
+            rules = _compose(sp, [r for r in head if r[0] in ("domain", "range")])
+            sess = schema.sparkSession
+            return (
+                local_frame(sess, rules, RULES_DDL) if rules else None,
+                local_frame(sess, sorted(sc), PAIRS_DDL) if sc else None,
+            )
+
+    def edges(tag: str) -> DataFrame:
+        return schema.filter(F.col("tag") == tag).select(
+            F.col("a").alias("child"), F.col("b").alias("parent")
+        )
+
+    decls = schema.filter(F.col("tag").isin("domain", "range")).select(
+        F.col("tag").alias("kind"), F.col("a").alias("q"), F.col("b").alias("cls")
+    )
+    return (
+        _compose_frames(_closure_pairs(edges("subproperty"), DRIVER_MAX), decls),
+        _closure_pairs(edges("subclass"), DRIVER_MAX),
     )
 
 
@@ -114,86 +211,63 @@ def rdfs_entailment(
 
     ``subclass``/``subproperty``: (child, parent) direct edges;
     ``domain``/``range_``: (pred, cls) declarations.  All four are
-    schema-sized and broadcast.  ``entity_prefixes`` guards rdfs3 —
-    literal-valued objects must not be typed; when given, only objects
-    with one of the prefixes receive range types (the standard
-    literal-guard every materializer applies)."""
-    from tabbyld_spark.functions.lineage import cut
+    schema-sized and compiled into two broadcast lookups.
+    ``entity_prefixes`` guards rdfs3 — literal-valued objects must not be
+    typed; when given, only objects with one of the prefixes receive range
+    types (the standard literal-guard every materializer applies)."""
+    rules, sc = _rule_tables(subclass, subproperty, domain, range_)
+    if rules is None and sc is None:
+        return local_frame(triples.sparkSession, [], TRIPLES_DDL)
 
-    sess = triples.sparkSession
-    derived: list[DataFrame] = []
+    # one scan of the input: every stage below emits its input rows (tag 1)
+    # plus what its lookup derives (tag 0), so the input needs no cut
+    subj, pred, obj = F.col("subj"), F.col("pred"), F.col("obj")
+    type_lit = F.lit(type_pred)
 
-    # every rule branch consumes the triple set (and the final anti-join a
-    # fifth time) — one lineage cut stops the branches re-deriving the
-    # input subtree per consumer (the multi-consumer pattern
-    # plans/webcorpus.py documents)
-    triples = cut(triples)
-    base = triples.filter(F.col("pred") != type_pred)
+    def row(s, p, o, tag):
+        return F.struct(s.alias("subj"), p.alias("pred"), o.alias("obj"), tag.alias("_in"))
 
-    # rdfs5+7: property inheritance through the subPropertyOf closure
-    inherited = None
-    if subproperty is not None:
-        sp = _closure_pairs(subproperty).select(
-            F.col("child").alias("pred"), F.col("parent").alias("new_pred")
+    def emit(df: DataFrame, fires, s, p, o) -> DataFrame:
+        pair = F.array(
+            row(subj, pred, obj, F.col("_in")), F.when(fires, row(s, p, o, F.lit(0)))
         )
-        inherited = (
-            base.join(F.broadcast(sp), "pred")
-            .select("subj", F.col("new_pred").alias("pred"), "obj")
+        return (
+            df.select(F.explode(pair).alias("r"))
+            .filter(F.col("r").isNotNull())
+            .select("r.*")
         )
-        derived.append(inherited)
 
-    # domain/range see the base triples PLUS property-inherited ones
-    dr_input = base if inherited is None else base.unionByName(inherited)
-
-    if domain is not None:
-        d = domain.select("pred", F.col("cls").alias("obj_cls"))
-        derived.append(
-            dr_input.join(F.broadcast(d), "pred").select(
-                "subj",
-                F.lit(type_pred).alias("pred"),
-                F.col("obj_cls").alias("obj"),
-            )
-        )
-    if range_ is not None:
-        r = range_.select("pred", F.col("cls").alias("obj_cls"))
-        ranged = dr_input
+    stream = triples.select(subj, pred, obj, F.lit(1).alias("_in"))
+    if rules is not None:
+        # rdfs5/7 + rdfs2/3: non-type triples look their predicate up
+        kind, val = F.col("kind"), F.col("val")
+        fires = kind.isNotNull()
         if entity_prefixes:
-            guard = None
-            for p in entity_prefixes:
-                cond = F.col("obj").startswith(p)
-                guard = cond if guard is None else (guard | cond)
-            ranged = ranged.filter(guard)
-        derived.append(
-            ranged.join(F.broadcast(r), "pred").select(
-                F.col("obj").alias("subj"),
-                F.lit(type_pred).alias("pred"),
-                F.col("obj_cls").alias("obj"),
-            )
+            entity = reduce(lambda a, b: a | b, [obj.startswith(p) for p in entity_prefixes])
+            fires = fires & ((kind != "range") | entity)
+        hits = stream.join(
+            F.broadcast(rules.filter(F.col("pred") != type_pred)), "pred", "left"
         )
+        stream = emit(
+            hits, fires,
+            F.when(kind == "range", obj).otherwise(subj),
+            F.when(kind == "inherit", val).otherwise(type_lit),
+            F.when(kind == "inherit", obj).otherwise(val),
+        )
+    if sc is not None:
+        # rdfs9/11: input and minted type triples look their class up
+        climbs = (pred == type_pred) & (obj == F.col("child"))
+        hits = stream.join(F.broadcast(sc), climbs, "left")
+        stream = emit(hits, F.col("child").isNotNull(), subj, type_lit, F.col("parent"))
 
-    # rdfs9+11: type inheritance through the subClassOf closure — over the
-    # input types AND the freshly-derived ones (domain/range outputs)
-    if subclass is not None:
-        sc = _closure_pairs(subclass).select(
-            F.col("child").alias("obj"), F.col("parent").alias("new_cls")
-        )
-        types = triples.filter(F.col("pred") == type_pred).select("subj", "obj")
-        for d_part in list(derived):
-            types = types.unionByName(
-                d_part.filter(F.col("pred") == type_pred).select("subj", "obj")
-            )
-        derived.append(
-            types.join(F.broadcast(sc), "obj").select(
-                "subj",
-                F.lit(type_pred).alias("pred"),
-                F.col("new_cls").alias("obj"),
-            )
-        )
-
-    if not derived:
-        return sess.createDataFrame([], "subj string, pred string, obj string")
-    out = derived[0]
-    for d_part in derived[1:]:
-        out = out.unionByName(d_part)
-    # a derived triple already present in the input is not "new"
-    return out.distinct().join(triples, ["subj", "pred", "obj"], "left_anti")
+    # one aggregate over derived ∪ input: a group is new when no input row
+    # states it.  A null key never matched in the anti-join this replaces,
+    # so such a group is new whenever it holds a derived row
+    keys = ["subj", "pred", "obj"]
+    has_null = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
+    return (
+        stream.groupBy(*keys)
+        .agg(F.min("_in").alias("_lo"), F.max("_in").alias("_hi"))
+        .filter((F.col("_lo") == 0) & ((F.col("_hi") == 0) | has_null))
+        .select(*keys)
+    )

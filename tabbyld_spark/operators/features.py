@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tabbyld_spark.fixtures.kg import DBO, DBR, NER_CLASS
+from tabbyld_spark.functions.frames import local_frame
 from tabbyld_spark.functions.keys import entity_skey, mention_skey, skey
 from tabbyld_spark.functions.normalize import entity_localname
 
@@ -77,8 +78,8 @@ def ensure_keys(cands: DataFrame) -> DataFrame:
 def _ner_paths(cands: DataFrame, kg_types: DataFrame, kg_subclass: DataFrame) -> DataFrame:
     """P10 aggregate: (mention_key, ent_key, ner_rank) for candidates with a
     type ⊑* NerClass path; absentees mean rank 0."""
-    ner_map = cands.sparkSession.createDataFrame(
-        [(label, cls) for label, cls in NER_CLASS.items()], ["ner", "ner_class"]
+    ner_map = local_frame(
+        cands.sparkSession, list(NER_CLASS.items()), "ner string, ner_class string"
     )
     up = kg_subclass.select(F.col("child").alias("class"), F.col("parent").alias("mid"))
     up2 = kg_subclass.select(F.col("child").alias("mid"), F.col("parent").alias("ner_class"))

@@ -56,6 +56,8 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tabbyld_spark.functions.frames import local_frame
+
 __all__ = [
     "bgp_match",
     "functional_violations",
@@ -196,10 +198,11 @@ def disjoint_type_conflicts(
     pair list); pair order is normalized so (A,B) and (B,A) declarations
     emit identical rows."""
     sess = triples.sparkSession
-    pairs = sess.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in disjoint_pairs],
+    pairs = local_frame(
+        sess,
+        sorted({(min(a, b), max(a, b)) for a, b in disjoint_pairs}),
         "class_a string, class_b string",
-    ).distinct()
+    )
     types = triples.filter(F.col("pred") == type_pred).select(
         "subj", F.col("obj").alias("cls")
     ).distinct()

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tabbyld_spark.functions.frames import local_frame
 from tabbyld_spark.operators.textstats import tokens
 
 
@@ -81,7 +82,7 @@ def bm25_scores(
     stats = dl.agg(
         F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
     ).withColumn("_one", F.lit(1))
-    q = spark.createDataFrame([(t.lower(),) for t in sorted(set(query_terms))], ["term"])
+    q = local_frame(spark, [(t.lower(),) for t in sorted(set(query_terms))], "term string")
     dfreq = tc.join(F.broadcast(q), "term").groupBy("term").agg(
         F.count(F.lit(1)).alias("df")
     )

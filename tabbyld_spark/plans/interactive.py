@@ -18,6 +18,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tabbyld_spark.functions.frames import local_frame
+
 
 @dataclass
 class InteractiveResult:
@@ -55,7 +57,7 @@ def annotate_workbook(
     from tabbyld_spark.sources.xlsx import CANONICAL_SCHEMA, workbook_to_canonical_rows
 
     rows = workbook_to_canonical_rows(table_id, data)
-    canonical = spark.createDataFrame(rows, CANONICAL_SCHEMA)
+    canonical = local_frame(spark, rows, CANONICAL_SCHEMA)
     res = annotate_canonical(
         canonical, kg, provided_ner=provided_ner, fuzzy_enabled=fuzzy_enabled
     )

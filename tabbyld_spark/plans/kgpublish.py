@@ -76,7 +76,8 @@ def publish_kg(
 ) -> PublishResult:
     """Entail → gate → commit → compact.  Returns the publish record; raises
     :class:`KGPublishError` (catalog untouched) when the gate trips."""
-    # cut once: the gate, the derived count and the commit each read it
+    # cut once each: the derived count and the saturated graph read the
+    # derived triples; the gate and the commit read the saturated graph
     derived = cut(rdfs_entailment(
         triples,
         subclass=subclass,
@@ -85,7 +86,7 @@ def publish_kg(
         range_=range_,
         entity_prefixes=entity_prefixes,
     ))
-    saturated = triples.unionByName(derived).distinct()
+    saturated = cut(triples.unionByName(derived).distinct())
 
     checks_enabled = bool(functional_preds or disjoint_pairs) or (
         entity_prefix is not None

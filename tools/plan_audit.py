@@ -107,13 +107,25 @@ def run_audit(spark, sf: str = "/root/testdata/sf0.01") -> list[tuple[str, bool,
         f"{p.count('BroadcastHashJoin')} broadcast joins in scoring plan",
     )
 
-    # 1e. RDFS entailment: every ontology join broadcasts (the corpus never
-    # shuffles for reasoning — no sort-merge anywhere in the rule tree)
+    # 1e. RDFS entailment: both ontology lookups (the pred-keyed rule table
+    # and SC*) broadcast — the corpus never shuffles for reasoning, no
+    # sort-merge anywhere in the rule pass
     p = plan_of(E.q_rdfs_entail(spark, sf))
     check(
         "broadcast/rdfs_entail",
-        "SortMergeJoin" not in p and p.count("BroadcastHashJoin") >= 3,
+        "SortMergeJoin" not in p and p.count("BroadcastHashJoin") >= 2,
         f"{p.count('BroadcastHashJoin')} broadcast joins, no sort-merge",
+    )
+    # ...and the pass is one compiled plan over all four schema frames: each
+    # lookup is broadcast once (not once per rule branch that reads it) and
+    # the only hash exchange is the aggregate that drops restated triples
+    heads = [ln.lstrip(" :+-*()0123456789") for ln in p.splitlines()]
+    broadcasts = sum(h.startswith("BroadcastExchange") for h in heads)
+    hashed = sum(h.startswith("Exchange hashpartitioning") for h in heads)
+    check(
+        "shape/rdfs_entailment",
+        broadcasts <= 2 and hashed == 1,
+        f"{broadcasts} BroadcastExchange, {hashed} hash Exchange",
     )
 
     # 1f. sessionization: ONE exchange (the user-grain session aggregate)
